@@ -306,6 +306,32 @@ def timed_reps(run, reps: int, warmup: int, release) -> tuple[list[float], int]:
     return out, n
 
 
+def release_session_state(spark, baseline_tables) -> None:
+    """Reset a long-lived session between executions: queries that
+    persist intermediates (LSH candidate frames) or register
+    memory-sink tables would otherwise accumulate cached blocks across
+    the ~300 executions of a full bench, degrading the queries that
+    run late in the session. Unpersists the candidate frames, clears
+    the SQL cache and drops every temporary view not named in
+    ``baseline_tables``."""
+    from sparkobs.operators.dedup import unpersist_candidates
+
+    unpersist_candidates()
+    spark.catalog.clearCache()
+    for t in spark.catalog.listTables():
+        if t.name not in baseline_tables and t.tableType == "TEMPORARY":
+            spark.catalog.dropTempView(t.name)
+
+
+def release_or_log(spark, baseline_tables, label: str) -> None:
+    """``release_session_state`` for an error path: a release that
+    fails too is logged to stderr, so the caller's loop goes on."""
+    try:
+        release_session_state(spark, baseline_tables)
+    except Exception as exc:  # noqa: BLE001 — log, keep benching
+        print(f"# {label}: session release FAILED: {exc}", file=sys.stderr)
+
+
 def pack_queries(timings: dict, budget: int = 1400) -> dict:
     """As many per-query p50 rows as fit ``budget`` bytes, slowest
     first (r14 verdict item 4, constrained by the driver contract):
@@ -435,18 +461,7 @@ def main() -> None:
     baseline_tables = {t.name for t in spark.catalog.listTables()}
 
     def _release_session_state():
-        # queries that persist intermediates (LSH candidate frames) or
-        # register memory-sink tables would otherwise accumulate cached
-        # blocks across the ~150 executions of a full bench, degrading
-        # the queries that run late in the session — measure each from
-        # a clean cache state
-        from sparkobs.operators.dedup import unpersist_candidates
-
-        unpersist_candidates()
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.name not in baseline_tables and t.tableType == "TEMPORARY":
-                spark.catalog.dropTempView(t.name)
+        release_session_state(spark, baseline_tables)
 
     missing = [n for n in HEADLINE if n not in qs]
     if missing:
@@ -486,22 +501,6 @@ def main() -> None:
         tail_budget = float(os.environ.get("SPARK_GRAFT_BENCH_TAIL_BUDGET", "600"))
         t_tail0 = time.perf_counter()
         tail_names = [n for n in qs if n not in set(HEADLINE)]
-        # staged-queue entries bench in the tail too (keyed
-        # "queue:<name>"), so a staged perf claim — e.g. the sparse-
-        # cosine production tier beating the exact tier — is a
-        # recorded BENCH_full row, not an assertion
-        try:
-            from sparkobs.queries_next import R7_QUEUE
-
-            queue_fns = {f"queue:{n}": fn for n, (fn, _) in R7_QUEUE.items()}
-        except Exception:  # noqa: BLE001 — queue is optional
-            queue_fns = {}
-        qs = dict(qs, **queue_fns)
-        # queue rows lead the tail: they carry staged perf CLAIMS
-        # (e.g. pruned-vs-exact), so a budget-exhausted slow round
-        # must cut registry coverage rows (re-measured every round)
-        # before it cuts these
-        tail_names = list(queue_fns) + tail_names
         for name in tail_names:
             if time.perf_counter() - t_tail0 > tail_budget:
                 # += : earlier FAILED names already recorded must not
@@ -525,7 +524,7 @@ def main() -> None:
             except Exception as exc:  # noqa: BLE001 — record, keep benching
                 tail_skipped.append(name)
                 print(f"# tail {name} FAILED: {exc}", file=sys.stderr)
-                _release_session_state()
+                release_or_log(spark, baseline_tables, f"tail {name}")
 
     # --- DuckDB same-SQL leg, SAME session/VM/minute (the r6 verdict:
     # cross-session ratios drift with shared-VM load — 2.29x stale vs

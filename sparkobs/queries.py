@@ -2922,7 +2922,7 @@ def _closure_ctes() -> str:
 
 # TOMBSTONE (r12): near_dup_groups_documents RETIRED — swap-ledger
 # entry #1 (SURVEY §2.11), the slot staged to filter_funnel
-# (queries_next.py). It was the EXACT-tier comparison leg of the
+# (then a staging queue). It was the EXACT-tier comparison leg of the
 # near-dup family (exact 3-gram Jaccard pairs ≥ 0.2 → min-label
 # components), a 3.0 s headline-profile top row whose certified claim
 # keeps TWO carriers without a dedicated gate slot:
@@ -5474,8 +5474,8 @@ def session_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # DuckDB replay of the curation pipeline's survivor sets (raw ->
 # quality-kept -> exact-deduped -> near-dup-kept), shared verbatim by
-# the curation_funnel_documents oracle and the staged
-# funnel_pipeline_parity_documents twin (queries_next.py, r13
+# the curation_funnel_documents oracle and the
+# funnel_pipeline_parity_documents twin (r13
 # swap-ledger #2 successor) so the two certifications can never
 # drift onto different pipeline semantics. Requires WITH RECURSIVE.
 _CURATION_CTES = """
@@ -7842,7 +7842,7 @@ def mutual_info_events_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # TOMBSTONE (r13): minhash_xx64_parity_documents RETIRED — swap-ledger
 # entry #2 (SURVEY §2.11), the slot staged to the funnel↔pipeline
-# certification twin (queries_next.py). It certified that the
+# certification twin (then a staging queue). It certified that the
 # production xxhash64 MinHash tier emits exactly the verified pair
 # set of the portable md5 tier (n_sym_diff = 0, driver-green r7-r12
 # at sf0.01). Its claim now has THREE carriers without a gate slot,
@@ -7980,7 +7980,7 @@ def compaction_execute_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Round-7 promotion — the first 50 entries of the r7 staging queue
-# (sparkobs/queries_next.py), oldest-staged first: TPC-H completion
+# (a since-removed staging module), oldest-staged first: TPC-H completion
 # (Q2/Q9/Q11/Q12/Q16/Q19/Q20/Q21), the statistics/behavior wave, the
 # iterative wave (k-means/ARI/PageRank, fixed-point + unrolled
 # oracles), streaming twins, exact quantiles, BM25, attribution,
@@ -9009,7 +9009,7 @@ def related_suppliers_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # TOMBSTONE (r14): ann_recall_embeddings RETIRED — swap-ledger entry
 # #4 (SURVEY §2.11), the slot staged to the quantized Kaplan–Meier
-# entry (queries_next.py). It certified recall@5 of the IVF tier
+# entry (registered below). It certified recall@5 of the IVF tier
 # against brute-force ground truth — a composition of TWO queries
 # that BOTH keep their own driver witnesses (`cosine_topk` the exact
 # truth, `cosine_topk_ivf` the pruned tier), so the retirement frees
@@ -9036,15 +9036,17 @@ def related_suppliers_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (r13).
 
 
-@query(
-    "km_survival_events",
-    oracle="""
+def _km_oracle(t_expr: str, alias: str) -> str:
+    """DuckDB replay of ``behavior.km_survival`` over per-user lifetimes
+    (1-day censoring horizon); ``t_expr`` maps the raw microsecond span
+    ``t1 - t0`` to the duration axis named ``alias``."""
+    return f"""
     WITH spans AS (
       SELECT user_id, min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
       FROM events GROUP BY 1),
     e AS (SELECT max(epoch_us(ts)) AS obs_end FROM events),
     durs AS (
-      SELECT (t1 - t0) // 86400000000 AS t,
+      SELECT {t_expr} AS t,
              CASE WHEN t1 < obs_end - 1 * 86400000000 THEN 1 ELSE 0 END AS obs
       FROM spans CROSS JOIN e),
     hist AS (SELECT t, count(*) AS n_t, sum(obs) AS d_t FROM durs GROUP BY 1),
@@ -9067,13 +9069,18 @@ def related_suppliers_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT t, d_t, n_at_risk,
              sum(lu) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS cu
       FROM logged)
-    SELECT CAST(t AS BIGINT) AS duration,
+    SELECT CAST(t AS BIGINT) AS {alias},
            CAST(n_at_risk AS BIGINT) AS n_at_risk,
            CAST(d_t AS BIGINT) AS n_deaths,
            CASE WHEN n_at_risk > d_t THEN round(exp(cu / 1e8), 4)
                 ELSE 0.0 END AS survival
     FROM cum WHERE d_t > 0
-    """,
+    """
+
+
+@query(
+    "km_survival_events",
+    oracle=_km_oracle("(t1 - t0) // 86400000000", "duration"),
 )
 def km_survival_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan–Meier time-to-churn curve over user lifetimes
@@ -9090,6 +9097,38 @@ def km_survival_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "events"), "user_id", "ts", 1
         )
     )
+
+
+@query(
+    "km_survival_quantized_events",
+    oracle=_km_oracle(
+        "((t1 - t0) // 86400000000) * 86400000000", "duration_us"
+    ),
+)
+def km_survival_quantized_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded-state Kaplan–Meier over CONTINUOUS durations: per-user
+    lifetimes enter as RAW integer-microsecond spans (distinct count
+    approaching subject count, the degenerate regime for the step-table
+    window) and ``km_survival(duration_grid=day_us)`` floor-snaps them
+    to whole-day bucket edges INSIDE the operator, capping the step
+    table at range/grid rows regardless of corpus size. Censoring
+    matches ``km_survival_events`` (1-day horizon); durations stay in
+    microseconds (bucket lower edges, day multiples), so the curve is
+    that entry's with the time axis in µs, computed from the
+    unquantized durations through ``duration_grid``. Oracle: the same
+    DuckDB replay with the grid snap done in SQL."""
+    from sparkobs.operators.behavior import churn_durations, km_survival
+
+    durs = churn_durations(
+        load_table(spark, sf_dir, "events"),
+        "user_id",
+        "ts",
+        1,
+        day_quantize=False,
+    )
+    return km_survival(
+        durs, duration_grid=86_400_000_000
+    ).withColumnRenamed("duration", "duration_us")
 
 
 @query(
@@ -10315,8 +10354,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twins, BFS reach, seasonal/lead-lag/incident observability, column diff,
 # monitor_suite, zone-map prune, CUBE, sliding HLL, and the multimodal
 # dedup legs (image exact/near, audio, video). Staged + oracle-certified
-# in queries_next.py during r7; moved here verbatim (staging order) for
-# driver certification.
+# in the staging queue during r7; moved here verbatim (staging order).
 # ---------------------------------------------------------------------------
 @query(
     "dim_ablation_recall_embeddings",
@@ -11795,8 +11833,8 @@ def video_framehash_dedup_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twin), the RIFF/AVI container video-dedup leg, the streaming sliding-HLL
 # twin, theta-sketch set algebra (batch + streaming twin), exact-substring
 # span removal, and the percentile SLO contract battery. Staged +
-# oracle-certified in queries_next.py during r8; moved here verbatim
-# (staging order) for driver certification.
+# oracle-certified in the staging queue during r8; moved here verbatim
+# (staging order).
 # ---------------------------------------------------------------------------
 def _kmv_est_sql(qs: tuple, sample: str = "sample", ka: str = "kk") -> str:
     """DuckDB CTE chain replaying Spark's exact ``percentile`` over a
@@ -12863,8 +12901,7 @@ def percentile_contract_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
 # leg + absolute-df-cap pruned tier, identical outputs — the r8 verdict's
 # one `weak`, resolved with a measured win), and the lake-wide
 # monitor_suite percentile-SLO capstone. Staged + oracle-certified in
-# queries_next.py during r9; moved here verbatim (staging order) for
-# driver certification.
+# the staging queue during r9; moved here verbatim (staging order).
 # ---------------------------------------------------------------------------
 
 _PL_DIM = 65536  # hash dim >> vocab so tail tokens keep their own dims
@@ -13056,11 +13093,8 @@ def monitor_suite_slo_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Phase 11 — the promoted round-10 queue (r11 gate wave): grouped
 # theta-sketch distinct-intersection (batch + streaming twin, one shared
-# oracle) and the sampled-CI AQP entry — the registry's 300th and LAST
-# net-new slot (GATE_SIZE x MAX_CERT_AGE_ROUNDS = 300; from here every
-# addition is a retire-then-stage swap). Staged + oracle-certified in
-# queries_next.py during r10; moved here verbatim (staging order) for
-# driver certification.
+# oracle) and the sampled-CI AQP entry. Staged + oracle-certified in
+# the staging queue during r10; moved here verbatim (staging order).
 # ---------------------------------------------------------------------------
 
 # --- grouped theta-sketch set algebra (r9 verdict stretch item 7) -----------
@@ -13322,13 +13356,8 @@ def streaming_theta_intersection_grouped_events(
 
 
 # --- sampled aggregation with confidence intervals (AQP) --------------------
-# The last net-new registry slot: GATE_SIZE (50) x MAX_CERT_AGE_ROUNDS
-# (6) caps the sustainable registry at 300 entries, and the registry +
-# queue stands at 299 — this entry takes it to exactly 300. Anything
-# after this is a SWAP (retire-with-tombstone, then stage), a policy
-# the r9 sparse-cosine retirement already exercised. Operator:
-# sampling.sampled_agg_ci (Horvitz-Thompson count/sum estimators over
-# the deterministic hash_sample predicate); unit tests in
+# Operator: sampling.sampled_agg_ci (Horvitz-Thompson count/sum
+# estimators over the deterministic hash_sample predicate); unit tests in
 # tests/test_r10_ops.py cover the one_in=1 exact degeneracy,
 # partitioning invariance, and CI coverage of the true totals.
 
@@ -13370,7 +13399,7 @@ def sampled_agg_ci_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- join-side sampled aggregation with confidence intervals (AQP) ----------
-# Promoted from the r11 staged queue (queries_next.py) into the r12
+# Promoted from the r11 staged queue into the r12
 # gate — the swap slot freed by the r11 sparse_cosine_powerlaw_exact
 # retirement (tombstone above). Operator:
 # sampling.sampled_join_agg_ci — coordinated key-UNIVERSE sampling

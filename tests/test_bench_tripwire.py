@@ -224,3 +224,63 @@ def test_duckdb_comparison_coverage_is_total_or_documented():
         assert n in SPARK_QUERIES, f"{n} documented but not registered"
         assert n not in ORACLE_SQL, f"{n} documented uncomparable but HAS an oracle"
         assert len(reason) > 20, f"{n}: reason too thin"
+
+
+class _FakeTable:
+    def __init__(self, name, table_type="TEMPORARY"):
+        self.name, self.tableType = name, table_type
+
+
+class _FakeCatalog:
+    def __init__(self, tables, fail_clear=False):
+        self.tables, self.fail_clear, self.dropped = tables, fail_clear, []
+
+    def clearCache(self):
+        if self.fail_clear:
+            raise RuntimeError("block manager gone")
+
+    def listTables(self):
+        return self.tables
+
+    def dropTempView(self, name):
+        self.dropped.append(name)
+
+
+class _FakeSpark:
+    def __init__(self, catalog):
+        self.catalog = catalog
+
+
+def test_release_session_state_drops_only_new_temp_views():
+    """The one release routine bench.py and tools/remeasure.py share:
+    temp views registered before the run survive, later ones go, and
+    non-temporary tables are never dropped."""
+    import bench
+
+    cat = _FakeCatalog([
+        _FakeTable("__baseline_view"),
+        _FakeTable("memory_sink_out"),
+        _FakeTable("managed", table_type="MANAGED"),
+    ])
+    bench.release_session_state(_FakeSpark(cat), {"__baseline_view"})
+    assert cat.dropped == ["memory_sink_out"]
+
+
+def test_tail_release_failure_is_logged_and_the_loop_goes_on(capsys):
+    """A release that fails on the tail loop's error path must not
+    abort the bench: it is logged to stderr, the call returns, and the
+    tail loop's except path goes through it."""
+    import inspect
+
+    import bench
+
+    cat = _FakeCatalog([_FakeTable("memory_sink_out")], fail_clear=True)
+    bench.release_or_log(_FakeSpark(cat), set(), "tail some_query")
+    err = capsys.readouterr().err
+    assert "tail some_query: session release FAILED: block manager gone" in err
+
+    tail_loop = inspect.getsource(bench.main).split("tail_names = ")[1]
+    handler = tail_loop.split("except Exception")[1]
+    assert "release_or_log(" in handler, (
+        "the tail loop's except path must release via release_or_log"
+    )
