@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # External-source (warehouse) tier — re-exported here so io is the one
 # place that names every source kind: parquet scans (load_table), temp
@@ -265,6 +266,56 @@ def oracle_substitute(sql: str, sf_dir: str) -> str:
     )
 
 
+#: Session confs that change the schema parquet inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+#: (realpath, st_size, st_mtime_ns, conf values) -> inferred schema.
+#: Holds StructTypes only: no DataFrame, plan or cached data.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema of a local
+    parquet file once per process.
+
+    Plain ``spark.read.parquet`` runs one Spark job per call just to
+    read the footer back. A local regular file's schema is memoized
+    under its resolved path, size and mtime plus the ``_SCHEMA_CONFS``
+    values, and a hit reads with that schema and starts no job. A file
+    rewritten at the same path gets a new key. A miss, or anything
+    that is not an absolute path to a local regular file (URIs,
+    directories, relative paths, which the JVM may resolve against
+    another working directory), takes the plain inferring read, which
+    still raises on a missing path."""
+    import os
+    import stat
+
+    try:
+        st = os.stat(path) if os.path.isabs(path) else None
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.realpath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Full/partial table scan (OP-01): lazy parquet read.
 
@@ -272,6 +323,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     — but lazy: a downstream ``.select``/``.filter`` reaches the parquet
     scan as column pruning / predicate pushdown instead of materializing
     the whole table like the reference's cursor fetch.
+
+    Schema inference is memoized (``_read_parquet``): the first read of
+    each table file in a process infers its schema, which costs one
+    Spark job; later reads of the same file, unchanged in size and
+    mtime and under the same schema-affecting session confs, reuse that
+    schema and start no job. Only the ``StructType`` is kept, so files
+    are still listed and scanned on every call. (perfbench's first
+    read of each file lands in its warm-up passes, part of
+    ``setup_s``.)
     """
     if name == "events":
         # events.parquet stores TIMESTAMP(NANOS), which Spark rejects
@@ -279,7 +339,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # conf) so the loader works under ANY session — including the
         # driver harness's vanilla SparkSession, not just ours.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos → microsecond TIMESTAMP_NTZ, built via timestampadd from
         # the epoch so the wall-clock value is independent of the

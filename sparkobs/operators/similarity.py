@@ -524,6 +524,11 @@ def cosine_topk_ivf(
     )
 
 
+#: Schema of the IVF index's ``centroids`` table, written by
+#: write_ivf_index and read back by query_ivf_index without inference.
+_IVF_CENTROIDS_SCHEMA = "cluster int, centroid array<double>"
+
+
 def write_ivf_index(
     df: DataFrame,
     path: str,
@@ -545,7 +550,7 @@ def write_ivf_index(
     assigned.write.mode("overwrite").partitionBy("cluster").parquet(f"{path}/data")
     spark = df.sparkSession
     spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cluster int, centroid array<double>"
+        [(i, c) for i, c in enumerate(cents)], _IVF_CENTROIDS_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
@@ -566,7 +571,12 @@ def query_ivf_index(
     """
     import math
 
-    cents_rows = spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
+    cents_rows = (
+        spark.read.schema(_IVF_CENTROIDS_SCHEMA)
+        .parquet(f"{path}/centroids")
+        .orderBy("cluster")
+        .collect()
+    )
     norm = math.sqrt(sum(x * x for x in vector)) or 1.0
     qn = [x / norm for x in vector]
     dots = [

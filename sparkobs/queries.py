@@ -4273,7 +4273,11 @@ def streaming_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame
         q.stop()
     finally:
         index.unpersist()
-    return spark.read.parquet(out_dir).distinct()
+    return (
+        spark.read.schema("stream_id bigint, index_id bigint")
+        .parquet(out_dir)
+        .distinct()
+    )
 
 
 def _sibi_cands(banded: DataFrame, index: DataFrame) -> DataFrame:
@@ -12394,7 +12398,8 @@ def streaming_hll_sliding_users_events(
     q.stop()
 
     regs = (
-        spark.read.parquet(state_dir)
+        spark.read.schema("__d date, bucket bigint, reg int")
+        .parquet(state_dir)
         .groupBy("__d", "bucket")
         .agg(F.max("reg").alias("reg"))
     )

@@ -190,3 +190,67 @@ def test_theta_side_filters_push_down(spark):
     ), f"tagged frame lost its pushed In prefilter: {pushed}"
     gt = Q._tig_tagged(ev)
     assert any("event_type" in s["pushed"] for s in P.scans(gt))
+
+
+# --- load_table's schema memo ----------------------------------------
+#
+# Plain ``spark.read.parquet`` runs one schema-inference Spark job per
+# call. load_table infers a file's schema once per process; a repeat
+# read of the unchanged file must start no job and read the same rows.
+
+
+def _jobs_started(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", ["orders", "events"])
+def test_repeat_load_table_starts_no_job(spark, name):
+    from collections import Counter
+
+    from sparkobs.io import load_table
+
+    first = load_table(spark, SF, name)
+    again, jobs = _jobs_started(
+        spark, f"schema-memo-{name}", lambda: load_table(spark, SF, name)
+    )
+    assert jobs == [], f"repeat load_table({name!r}) started jobs {jobs}"
+    assert again.schema == first.schema
+    assert Counter(again.collect()) == Counter(first.collect())
+    if name == "events":
+        # the nanos column still reaches callers as TIMESTAMP_NTZ
+        assert dict(again.dtypes)["ts"] == "timestamp_ntz"
+
+
+def test_rewritten_table_file_is_read_with_its_new_schema(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkobs.io import load_table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    load_table(spark, str(tmp_path), "t")
+    old, jobs = _jobs_started(
+        spark, "schema-memo-rewrite", lambda: load_table(spark, str(tmp_path), "t")
+    )
+    assert jobs == [] and old.columns == ["a"]
+
+    pq.write_table(pa.table({"a": [3], "b": ["three"]}), path)
+    new = load_table(spark, str(tmp_path), "t")
+    assert new.columns == ["a", "b"]
+    assert [tuple(r) for r in new.collect()] == [(3, "three")]
+
+
+def test_missing_table_file_still_raises(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from sparkobs.io import load_table
+
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path), "absent")

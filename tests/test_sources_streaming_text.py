@@ -926,3 +926,57 @@ def test_video_frame_hashes_rotation_overlap(spark):
     assert len(by_vid[1] & by_vid[1 + 1_000_000_000]) == 2
     # unrelated docs share nothing
     assert not (by_vid[1] & by_vid[2])
+
+
+@pytest.mark.parametrize(
+    "name, partial",
+    [
+        ("streaming_kmv_quantiles_events", "_skmv_partial"),
+        ("streaming_hll_sliding_users_events", "_shll_partial"),
+    ],
+)
+def test_streaming_sketch_twins_merge_across_batches(
+    spark, sf_dir, tmp_path, monkeypatch, name, partial
+):
+    """The maxFilesPerTrigger=1 sketch twins fold per-batch partials
+    into one state table. ``_stage_events`` writes a single file from
+    the one-file source, so the registry run drains one data batch and
+    never merges. Stage four real files instead: the twin must run at
+    least four micro-batches and still equal its DuckDB oracle. sf0.01
+    has 10,000 events against a KMV bottom-k of 1,024, so the merged
+    sketch is a real selection across batches; a twin that kept only
+    its last batch's partial fails here."""
+    import duckdb
+
+    import sparkobs.queries as Q
+    from tools.check_oracle import TABLES, canon
+
+    sf_dir = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    stage = str(tmp_path / "events4")
+    load_table(spark, sf_dir, "events").repartition(4).write.parquet(stage)
+    files = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+    assert len(files) == 4
+    monkeypatch.setattr(Q, "_stage_events", lambda *a, **k: stage)
+
+    batches = []
+    real_partial = getattr(Q, partial)
+
+    def counted(batch_df):
+        batches.append(1)
+        return real_partial(batch_df)
+
+    monkeypatch.setattr(Q, partial, counted)
+
+    sdf = Q.SPARK_QUERIES[name](spark, sf_dir)
+    s_rows = sdf.collect()
+    assert len(batches) >= 4
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    res = con.execute(Q.ORACLE_SQL[name].replace("{SF_DIR}", os.path.realpath(sf_dir)))
+    d_cols = [d[0] for d in res.description]
+    assert sorted(sdf.columns) == sorted(d_cols)
+    assert canon(s_rows, sdf.columns) == canon(res.fetchall(), d_cols)
